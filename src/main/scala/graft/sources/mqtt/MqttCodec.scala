@@ -31,11 +31,15 @@ object MqttCodec {
 
   final case class Packet(ptype: Int, flags: Int, body: Array[Byte])
 
+  /** The largest remaining length a 4-byte varint carries (§2.2.3). */
+  val MaxRemainingLength = 268435455
+
   /** One whole packet onto the stream (flushed — packets are the unit of
     * conversation; a buffered half-packet would stall the peer).
     */
   def writePacket(out: OutputStream, ptype: Int, flags: Int,
       body: Array[Byte]): Unit = {
+    require(body.length <= MaxRemainingLength, s"MQTT body of ${body.length} bytes")
     out.write(((ptype << 4) | (flags & 0x0F)) & 0xFF)
     var len = body.length
     // remaining-length varint (§2.2.3): 7 value bits per byte, MSB = more
@@ -51,28 +55,29 @@ object MqttCodec {
   }
 
   /** Blocking read of one whole packet; EOFException on orderly peer close
-    * (the CONN_LOST signal the transport's reader consumes).
+    * (the CONN_LOST signal the transport's reader consumes), IOException on
+    * a remaining length longer than 4 bytes. The body buffer grows only as
+    * bytes arrive, so a peer's claimed length allocates nothing up front.
     */
   def readPacket(in: InputStream): Packet = {
     val first = in.read()
     if (first < 0) throw new EOFException("MQTT stream closed")
-    var mult = 1
     var len = 0
-    var b = 0
-    var continue = true
-    while (continue) {
+    var shift = 0
+    var b = 0x80
+    while ((b & 0x80) != 0) {
+      if (shift == 28)
+        throw new java.io.IOException("malformed remaining length: more than 4 bytes")
       b = in.read()
       if (b < 0) throw new EOFException("MQTT stream closed mid-header")
-      len += (b & 0x7F) * mult
-      mult *= 128
-      if (mult > 128 * 128 * 128 * 128)
-        throw new java.io.IOException("malformed remaining length")
-      continue = (b & 0x80) != 0
+      len |= (b & 0x7F) << shift
+      shift += 7
     }
-    val body = new Array[Byte](len)
+    var body = new Array[Byte](math.min(len, 8192))
     var off = 0
     while (off < len) {
-      val n = in.read(body, off, len - off)
+      if (off == body.length) body = java.util.Arrays.copyOf(body, math.min(len, off * 2))
+      val n = in.read(body, off, body.length - off)
       if (n < 0) throw new EOFException("MQTT stream closed mid-body")
       off += n
     }

@@ -133,6 +133,9 @@ final class SocketMqttTransport(
     } catch {
       case NonFatal(_) =>
         if (!closing && epoch.get() == myEpoch) status = ErrConnLost
+        // a malformed frame leaves the stream unframeable: drop the socket
+        // so the peer sees the close, not a connection that went quiet
+        try sock.close() catch { case NonFatal(_) => () }
     }
 
   override def subscribe(topicFilter: String, qos: Int): Unit = {

@@ -58,10 +58,12 @@ object StreamingState {
     finishState(merged, m)
   }
 
-  /** Detach the merged state from its temp parquet: the state is
-    * topic-dimension-sized, so pulling it into a driver-local frame (the
-    * certified-OUTPUT seam, same class as the memory-sink readbacks) lets
-    * the working dir be deleted before returning a lazy result.
+  /** Detach the merged state from its temp parquet, read through
+    * [[UpsertSink.readState]] (the one owner of the state layout): the
+    * state is topic-dimension-sized, so pulling it into a driver-local
+    * frame (the certified-OUTPUT seam, same class as the memory-sink
+    * readbacks) lets the working dir be deleted before returning a lazy
+    * result.
     */
   private[streaming] def detachState(spark: SparkSession,
       statePath: String): DataFrame = {
@@ -76,10 +78,9 @@ object StreamingState {
         org.apache.spark.sql.types.IntegerType),
       org.apache.spark.sql.types.StructField("retain",
         org.apache.spark.sql.types.IntegerType)))
-    val rows = spark.read.parquet(statePath)
-      .withColumn("ts", col("ts").cast("timestamp_ntz"))
-      .select(col("topic"), col("ts"), col("value"), col("qos"), col("retain"))
-      .collect()
+    val rows = UpsertSink.readState(spark, statePath).map(
+      _.select(col("topic"), col("ts").cast("timestamp_ntz"), col("value"), col("qos"),
+        col("retain")).collect()).getOrElse(Array.empty[org.apache.spark.sql.Row])
     spark.createDataFrame(java.util.Arrays.asList(rows: _*), schema)
   }
 

@@ -2,7 +2,8 @@ package graft.streaming
 
 import java.sql.{Connection, DriverManager}
 
-import org.apache.spark.sql.{DataFrame, SaveMode}
+import org.apache.hadoop.fs.{FileSystem, Path}
+import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -19,9 +20,12 @@ import org.apache.spark.sql.functions._
   *    JDBC engine shipped with Spark); the SQL is standard `MERGE`
   *    (MySQL 8 / Derby 10.11+ / Postgres 15).
   *  - [[merge]] — file-based stand-in for environments without a
-  *    transactional store: keyed merge over parquet, full-rewrite per batch
-  *    (documented O(total state) IO — fine for dimension-sized state, wrong
-  *    for big state; that's what mergeJdbc/Delta are for).
+  *    transactional store: each micro-batch is appended raw as a parquet
+  *    delta (O(batch)), [[readState]] folds base + deltas on read, and the
+  *    deltas are compacted into a new base once their bytes outweigh it.
+  *    A compaction reads less than twice the bytes of the deltas it folds,
+  *    so the amortised IO per batch is O(batch); the number of live deltas
+  *    grows with state size over batch size.
   *
   * Both are idempotent per key: replaying a micro-batch after a checkpoint
   * restart converges to the same state. Checkpointed offsets + an idempotent
@@ -83,42 +87,100 @@ object UpsertSink {
     } finally conn.close()
   }
 
+  // Layout of a parquet state directory: the compacted base, the previous
+  // base kept only across a publish, the base being written, and one delta
+  // per uncompacted batch.
+  private[streaming] val Base = "base"
+  private[streaming] val BasePrev = "base_prev"
+  private val BaseTmp = "base_tmp"
+  private val DeltaDir = """d-\d+""".r
+
+  private[streaming] def deltaName(batchId: Long): String = s"d-$batchId"
+
+  /** What lives under a state directory: the base to fold from (`base`, or
+    * `base_prev` when a crash fell between the publish renames), the
+    * deltas, and the data bytes of each side.
+    */
+  private final case class Layout(base: Option[Path], baseBytes: Long,
+      deltas: Seq[Path], deltaBytes: Long, leftovers: Seq[Path]) {
+    def parts: Seq[Path] = base.toSeq ++ deltas
+  }
+
+  private def layout(fs: FileSystem, root: Path): Layout = {
+    val dirs =
+      if (fs.exists(root)) fs.listStatus(root).filter(_.isDirectory).map(_.getPath).toSeq
+      else Nil
+    // data files only: Spark's readers skip `_SUCCESS` and `.crc` files too
+    def bytes(dir: Path) = fs.listStatus(dir).filter(_.isFile)
+      .filterNot(f => "_.".contains(f.getPath.getName.head)).map(_.getLen).sum
+    val base = dirs.find(_.getName == Base).orElse(dirs.find(_.getName == BasePrev))
+    val deltas = dirs.filter(d => DeltaDir.matches(d.getName))
+    // a delta's tmp dir outlives a crash mid-write if the replay compacts
+    val leftovers = dirs.filter(d => d.getName.startsWith("d-") && d.getName.endsWith("_tmp"))
+    Layout(base, base.map(bytes).getOrElse(0L), deltas, deltas.map(bytes).sum, leftovers)
+  }
+
+  private def fileSystem(spark: SparkSession, root: Path): FileSystem =
+    root.getFileSystem(spark.sessionState.newHadoopConf())
+
   /** Merge one micro-batch into the keyed parquet state at `statePath`
-    * (file-based stand-in; see class doc for the scale boundary).
+    * (file-based stand-in for a transactional store).
     * Usage: `stream.writeStream.foreachBatch(UpsertSink.merge(path) _)`.
     *
-    * Parquet has no transactional MERGE, so publishing is
-    * write-tmp -> retire-current -> rename-tmp; a crash between the renames
-    * leaves the previous state recoverable at `_prev` (readState falls back),
-    * never a window where both copies are gone.
+    * A batch normally costs O(batch): it is written raw, with no reduce and
+    * no shuffle, as the delta `d-<batchId>` (to a tmp dir, then renamed, so
+    * a delta is either whole or absent; a replayed batch replaces its own
+    * delta; a crash between its delete and rename loses only a batch whose
+    * offsets are not committed yet, so it is replayed). Once the deltas
+    * already outweigh the base, by the data bytes listed under
+    * `statePath`, the batch is not written as a delta: base + deltas +
+    * batch are folded with [[lastPerKey]] into a new base instead. That
+    * compaction is the only step that reads state; it costs one full
+    * rewrite, amortised over the batches since the last one. Its read
+    * passes the batch's schema, so no inference job runs.
+    *
+    * Publishing a base is write `base_tmp` -> rename `base` to `base_prev`
+    * -> rename `base_tmp` to `base` -> delete `base_prev` -> delete the
+    * folded deltas. Each crash window leaves a readable state:
+    *  - before the renames, the old base and every delta are intact;
+    *  - between them, [[readState]] falls back to `base_prev` + deltas;
+    *  - after them, deltas that outlive the crash are already in the base,
+    *    and folding them again picks the same winners.
     */
   def merge(statePath: String)(batch: DataFrame, batchId: Long): Unit = {
     val spark = batch.sparkSession
-    val batchLast = lastPerKey(batch)
-    val existing = readState(spark, statePath).getOrElse(
-      spark.createDataFrame(
-        spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], batchLast.schema))
-    val merged = lastPerKey(existing.unionByName(batchLast))
-    val fs = org.apache.hadoop.fs.FileSystem.get(spark.sparkContext.hadoopConfiguration)
-    val dst = new org.apache.hadoop.fs.Path(statePath)
-    val tmp = new org.apache.hadoop.fs.Path(statePath + s"_tmp_$batchId")
-    val prev = new org.apache.hadoop.fs.Path(statePath + "_prev")
-    merged.write.mode(SaveMode.Overwrite).parquet(tmp.toString)
-    fs.delete(prev, true)
-    if (fs.exists(dst)) fs.rename(dst, prev)
-    fs.rename(tmp, dst)
-    fs.delete(prev, true)
+    val root = new Path(statePath)
+    val fs = fileSystem(spark, root)
+    val now = layout(fs, root)
+    if (now.deltaBytes > now.baseBytes) {
+      val tmp = new Path(root, BaseTmp)
+      val base = new Path(root, Base)
+      val prev = new Path(root, BasePrev)
+      val stored = spark.read.schema(batch.schema).parquet(now.parts.map(_.toString): _*)
+      lastPerKey(stored.unionByName(batch)).write.mode(SaveMode.Overwrite).parquet(tmp.toString)
+      if (fs.exists(base)) { fs.delete(prev, true); fs.rename(base, prev) }
+      fs.rename(tmp, base)
+      fs.delete(prev, true)
+      (now.deltas ++ now.leftovers).foreach(fs.delete(_, true))
+    } else {
+      val dst = new Path(root, deltaName(batchId))
+      val tmp = new Path(root, deltaName(batchId) + "_tmp")
+      batch.write.mode(SaveMode.Overwrite).parquet(tmp.toString)
+      fs.delete(dst, true)
+      fs.rename(tmp, dst)
+    }
   }
 
-  /** Current state, falling back to the `_prev` copy if a crash interrupted
-    * the publish dance mid-rename.
+  /** Current state: base (or `base_prev`) + deltas folded with
+    * [[lastPerKey]], the same (ts desc, msg_id desc) winner per key as one
+    * reduce over every message merged so far. None before the first batch.
+    * With no batch at hand to give the schema, Spark reads it from one
+    * file's footer.
     */
-  def readState(spark: org.apache.spark.sql.SparkSession,
-      statePath: String): Option[DataFrame] =
-    try Some(spark.read.parquet(statePath))
-    catch {
-      case _: Exception =>
-        try Some(spark.read.parquet(statePath + "_prev"))
-        catch { case _: Exception => None }
-    }
+  def readState(spark: SparkSession, statePath: String): Option[DataFrame] = {
+    val root = new Path(statePath)
+    val parts = layout(fileSystem(spark, root), root).parts
+    if (parts.isEmpty) None
+    else Some(lastPerKey(spark.read.parquet(parts.map(_.toString): _*)))
+  }
 }

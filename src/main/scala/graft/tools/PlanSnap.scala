@@ -19,12 +19,18 @@ import org.apache.spark.sql.SparkSession
   * (LocalTableScan = driver-resident vs an RDD/file scan = distributed).
   */
 object PlanSnap {
-  def main(args: Array[String]): Unit = {
-    require(args.length >= 3, "usage: PlanSnap <outDir> <tag> [-f] <query> [query...]")
-    val outDir = args(0)
-    val tag = args(1)
-    val force = args(2) == "-f"
+  val Usage = "usage: PlanSnap <outDir> <tag> [-f] <query> [query...]"
+
+  /** (outDir, tag, force, query names); at least one name is required. */
+  def parseArgs(args: Array[String]): (String, String, Boolean, Seq[String]) = {
+    val force = args.length > 2 && args(2) == "-f"
     val names = args.drop(if (force) 3 else 2).toSeq
+    require(names.nonEmpty, Usage)
+    (args(0), args(1), force, names)
+  }
+
+  def main(args: Array[String]): Unit = {
+    val (outDir, tag, force, names) = parseArgs(args)
     val dir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.001")
     val spark = SparkSession.builder()
       .master("local[4]")
